@@ -122,12 +122,19 @@ def main(argv: list[str] | None = None) -> int:
             else:
                 remove = [c for c in args.remove.split(",") if c]
         spark.range(1_000_000).selectExpr("sum(id)").collect()  # warmup
+        # the fold's Spark jobs are counted by job group (driver-side
+        # status tracker, no extra job): at small deltas they set its wall
+        sc = spark.sparkContext
+        sc.setJobGroup("incremental_apply", "incremental fold")
         t0 = time.monotonic()
         if args.append and not args.remove:
             res = inc.append(new_turns)
         else:
             res = inc.apply(new_turns=new_turns, remove_conv_ids=remove)
         wall = time.monotonic() - t0
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events are async
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup("incremental_apply"))
         n_new_turns = _parquet_rows(args.append) if args.append else 0
         report = {
             "mode": "incremental_apply",
@@ -140,6 +147,7 @@ def main(argv: list[str] | None = None) -> int:
             "n_clusters": res.clusters.filter("conv_id = cluster_id").count(),
             "skewed_buckets": res.skew_report.count(),
             "wall_sec": round(wall, 3),
+            "jobs": n_jobs,
             "new_turns_per_sec": round(n_new_turns / wall, 1) if wall else 0.0,
             "master": spark.sparkContext.master,
             # non-UDF stage input sizes ∝ (new ∪ affected) — the

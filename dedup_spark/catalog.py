@@ -181,7 +181,8 @@ class StageCatalog:
             sidecar.update(meta)
         with open(self._meta_path(name), "w") as f:
             json.dump(sidecar, f)
-        return self.read(name)
+        # the schema is known: a plain read would infer it with a job
+        return self.spark.read.schema(df.schema).parquet(path)
 
     def adopt(self, src: str, dst: str, meta: dict | None = None) -> None:
         """MOVE an existing stage table to a new name (driver-side

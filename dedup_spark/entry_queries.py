@@ -20,6 +20,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from dedup_spark.util import local_frame
+
 CHUNK = 20  # tokens per derived turn
 K = 17      # char-shingle size (parity with reference kmer_size, dedup.py:542)
 
@@ -1681,8 +1683,8 @@ def _q_containment_minm_pairs(spark, sf_dir):
             F.first("n_b").alias("n_b"),
         )
     )
-    thr = spark.createDataFrame(
-        _cont_twin_thresholds(), "s_small int, s_large int, m_min int"
+    thr = local_frame(
+        spark, _cont_twin_thresholds(), "s_small int, s_large int, m_min int"
     )
     s_small = F.expr("length(bin(least(n_a, n_b))) - 1").cast("int")
     s_large = F.expr("length(bin(greatest(n_a, n_b))) - 1").cast("int")

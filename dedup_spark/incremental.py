@@ -39,7 +39,18 @@ tables, so per-apply work is
   full-corpus shuffle, no full-corpus UDF, no wholesale rewrite of any
   corpus-sized table. Segment reads are bounded by periodic
   :meth:`IncrementalDedup.compact` (auto after ``auto_compact_segments``
-  epochs).
+  epochs);
+* fixed cost ∝ Spark actions: 50-110 jobs per small fold on
+  ``local[4]`` (tests/test_incremental.py pins a budget), and at small
+  deltas these jobs, not the rows, set the fold's wall time. Each
+  intermediate is one checkpoint, one job per AQE stage, and that job
+  also reports the row counts and aggregates the fold needs
+  (:func:`~dedup_spark.util.ckpt_observe`); an intermediate with no
+  rows becomes an empty ``LocalRelation``, so the plans downstream of
+  it are pruned. Each state table is read, and its parquet schema
+  inferred, at most once per :class:`IncrementalDedup`; each write is
+  one job. Empty and id-list frames are ``LocalRelation`` plans, which
+  start no Python worker.
 
 Atomicity (a crash mid-fold must never leave a silently-torn
 warehouse): every state table's sidecar carries the epoch it was
@@ -87,7 +98,7 @@ from dedup_spark.operators import lsh, shingling, verify
 from dedup_spark.operators.connected_components import connected_components
 from dedup_spark.operators.transcripts import assemble_transcripts
 from dedup_spark.pipeline import DedupPipeline
-from dedup_spark.util import eager_ckpt
+from dedup_spark.util import ckpt_observe, eager_ckpt, empty_frame, local_frame
 
 # ---------------------------------------------------------------- state names
 #: segmented state tables (one parquet dir per epoch: "<name>__s<e>")
@@ -106,6 +117,7 @@ TBL_SKEW = "inc_skew"
 _WHOLESALE = (TBL_RETIRED_SETS, TBL_RETIRED_SIGS, TBL_VERIFIED, TBL_CLUSTERS,
               TBL_SKEW)
 _MANIFEST = "_inc_manifest.json"
+_SKEW_DDL = "band_id int, band_hash long, bucket_size long"
 
 #: batch-pipeline stage names that become stale the moment the corpus
 #: drifts from what they were computed on (the config fingerprint cannot
@@ -182,6 +194,11 @@ class IncrementalDedup:
         #: df state-probe regime for re-sign lookups: "auto" picks by
         #: affected fraction; "restricted"/"full" pin a branch (tests)
         self.df_probe_regime = "auto"
+        #: state table name → parquet frame, as of the committed
+        #: manifest: a parquet read infers its schema with a Spark job,
+        #: and a fold reads each segment ~15 times. Updated only after a
+        #: manifest commit; bootstrap and compact rebuild it
+        self._frames: dict[str, DataFrame] = {}
 
     # ------------------------------------------------------------- manifest
 
@@ -257,15 +274,19 @@ class IncrementalDedup:
 
     # ------------------------------------------------------------ seg reads
 
+    def _table(self, name: str) -> DataFrame:
+        """Frame of one committed state table (segment or wholesale)."""
+        if name not in self._frames:
+            self._frames[name] = self.cat.read(name)
+        return self._frames[name]
+
     def _seg_union(self, man: dict, base: str) -> DataFrame | None:
         """Union of a table's manifest-listed segments, each tagged with
         its epoch as ``__e``. Immutable dirs — plans built on this stay
         valid across folds (folds only ADD segments)."""
         out = None
         for e in man["segments"].get(base, []):
-            df = self.cat.read(f"{base}__s{e}").withColumn(
-                "__e", F.lit(int(e))
-            )
+            df = self._table(f"{base}__s{e}").withColumn("__e", F.lit(int(e)))
             out = df if out is None else out.unionByName(df)
         return out
 
@@ -356,14 +377,18 @@ class IncrementalDedup:
         df) table (the slim in_band pipeline checkpoint cannot answer
         "was this df 1 or out-of-band", so state keeps real counts
         including 1), and the raw turns are computed/written fresh."""
+        self._frames = {}
         res = self.pipeline.run(turns)
         cat, cfg = self.cat, self.cfg
         banding = cfg.candidate_source == "banding"
 
         segs: dict[str, list[int]] = {}
+        written: dict[str, DataFrame] = {}
 
         def seg(name: str, df: DataFrame) -> None:
-            cat.write(f"{name}__s0", df, meta={"epoch": 0})
+            written[f"{name}__s0"] = cat.write(
+                f"{name}__s0", df, meta={"epoch": 0}
+            )
             segs[name] = [0]
 
         def adopt(src: str, dst_seg: str) -> None:
@@ -381,26 +406,25 @@ class IncrementalDedup:
         adopt("shingle_sets", SEG_SETS)
         adopt("signatures", SEG_SIGS)
 
-        empty_retired = self.spark.createDataFrame(
-            [], "conv_id string, __e int"
-        )
+        empty_retired = empty_frame(self.spark, "conv_id string, __e int")
         epoch_meta = {"epoch": 0}
         cat.adopt("verified_pairs", TBL_VERIFIED, meta=epoch_meta)
         cat.adopt("clusters", TBL_CLUSTERS, meta=epoch_meta)
         if banding:
             cat.adopt("skew_report", TBL_SKEW, meta=epoch_meta)
         else:
-            cat.write(TBL_SKEW, self.spark.createDataFrame(
-                [], "band_id int, band_hash long, bucket_size long"
-            ), meta=epoch_meta)
-        cat.write(TBL_RETIRED_SETS, empty_retired, meta=epoch_meta)
-        cat.write(TBL_RETIRED_SIGS, empty_retired, meta=epoch_meta)
+            written[TBL_SKEW] = cat.write(
+                TBL_SKEW, empty_frame(self.spark, _SKEW_DDL), meta=epoch_meta
+            )
+        for tbl in (TBL_RETIRED_SETS, TBL_RETIRED_SIGS):
+            written[tbl] = cat.write(tbl, empty_retired, meta=epoch_meta)
 
         # smallest signed stratum for the prefix probe range (tracked in
         # the manifest; monotone-decreasing — deletes never raise it, a
         # superset probe range is merely extra candidates)
+        written[f"{SEG_SIGS}__s0"] = cat.read(f"{SEG_SIGS}__s0")
         min_n = (
-            cat.read(f"{SEG_SIGS}__s0")
+            written[f"{SEG_SIGS}__s0"]
             .agg(F.min("n_shingles").alias("m")).collect()[0]["m"]
         )
         self._commit_manifest({
@@ -409,6 +433,7 @@ class IncrementalDedup:
             "segments": segs,
             "min_stratum": int(math.floor(math.log2(min_n))) if min_n else 0,
         })
+        self._frames = written
         return res
 
     # ----------------------------------------------------------- public API
@@ -455,34 +480,37 @@ class IncrementalDedup:
             t_phases[name] = round(now - t_last, 2)
             t_last = now
 
-        # small rewritten tables are eagerly checkpointed so every plan
-        # built below survives the fold's rewrites (segment dirs are
-        # immutable and need no such shielding)
-        retired_sets = eager_ckpt(cat.read(TBL_RETIRED_SETS))
-        retired_sigs = eager_ckpt(cat.read(TBL_RETIRED_SIGS))
-        old_verified = eager_ckpt(cat.read(TBL_VERIFIED))
-        old_skew = eager_ckpt(cat.read(TBL_SKEW)) if banding else None
+        # the retired lists are eagerly checkpointed: lazy plans built on
+        # them (the returned emit) must survive the fold's rewrites.
+        # Segment dirs are immutable and need no such shielding, and the
+        # old result tables feed only frames checkpointed before the fold
+        retired_sets = eager_ckpt(self._table(TBL_RETIRED_SETS))
+        retired_sigs = eager_ckpt(self._table(TBL_RETIRED_SIGS))
+        old_verified = self._table(TBL_VERIFIED)
+        old_skew = self._table(TBL_SKEW) if banding else None
 
-        removed = self._as_conv_df(remove_conv_ids)
+        # every row count below comes from the checkpoint job that
+        # materializes the frame (ckpt_observe), never a separate action
+        removed, n_removed = self._as_conv_df(remove_conv_ids), 0
         if removed is not None:
-            removed = eager_ckpt(removed.select("conv_id").dropDuplicates())
-        t_new = (
-            eager_ckpt(assemble_transcripts(new_turns))
-            if new_turns is not None else None
-        )
+            removed, seen = ckpt_observe(removed)
+            n_removed = seen["n"]
+        t_new, n_new = None, 0
+        if new_turns is not None:
+            t_new, seen = ckpt_observe(assemble_transcripts(new_turns))
+            n_new = seen["n"]
 
         # one scan of the sets segments serves the guards AND the CC
         # node list (live conv ids are tiny — checkpoint, never rescan)
-        live_ids = eager_ckpt(
+        live_ids, seen = ckpt_observe(
             self._resolve_conv(man, SEG_SETS, retired_sets).select("conv_id")
         )
+        n_live = seen["n"]
         self._guard_ids(live_ids, t_new, removed, _append_only)
-        n_removed = removed.count() if removed is not None else 0
-        n_new = t_new.count() if t_new is not None else 0
         rpt["n_new_convs"], rpt["n_removed_convs"] = n_new, n_removed
         tick("guards")
 
-        empty_convs = spark.createDataFrame([], "conv_id string")
+        empty_convs = empty_frame(spark, "conv_id string")
         removed_c = removed if removed is not None else empty_convs
 
         # 1. UDF cost ∝ NEW characters only
@@ -493,7 +521,7 @@ class IncrementalDedup:
             )
         else:
             sets_new = None
-            df_add = spark.createDataFrame([], "shingle long, df long")
+            df_add = empty_frame(spark, "shingle long, df long")
         if removed is not None:
             sets_removed = self._resolve_conv(
                 man, SEG_SETS, retired_sets, restrict=removed,
@@ -503,54 +531,54 @@ class IncrementalDedup:
                 shingling.exploded_shingles(sets_removed)
             )
         else:
-            df_sub = spark.createDataFrame([], "shingle long, df long")
+            df_sub = empty_frame(spark, "shingle long, df long")
 
         # 2. df delta for TOUCHED shingles only; old totals come from a
         # shingle-restricted state read, never a full-corpus merge.
         # Net-zero rows (an edit removing and re-adding the same
         # shingle) are kept separately: their df is unchanged but the
         # re-sign lookup below still needs a state value for them.
-        touched_all = eager_ckpt(
+        touched_all, seen = ckpt_observe(
             df_add.withColumnRenamed("df", "d_add")
             .join(df_sub.withColumnRenamed("df", "d_sub"), "shingle", "full_outer")
             .select(
                 "shingle",
                 (F.coalesce("d_add", F.lit(0)) - F.coalesce("d_sub", F.lit(0))
                  ).alias("d"),
-            )
+            ),
+            n_touched=F.count_if(F.col("d") != 0),
         )
         delta = touched_all.filter(F.col("d") != 0)
         zero_keys = touched_all.filter(F.col("d") == 0).select("shingle")
-        rpt["n_touched_shingles"] = delta.count()
+        rpt["n_touched_shingles"] = seen["n_touched"]
         tick("shingle_delta")
         df_old_touched = self._resolve_kv(
             man, SEG_DF, ["shingle"], "df", restrict=delta,
             n_restrict=rpt["n_touched_shingles"],
         )
-        merged_touched = eager_ckpt(
+        # 3. band flips → affected OLD conversations. Only touched
+        # shingles can flip; membership probe is a semi-join of the
+        # (immutable-segment) set explode against the small flip list —
+        # columnar scan of the corpus, shuffle ∝ hits.
+        in_band = lambda c: F.col(c).between(F.lit(lo), F.lit(hi))  # noqa: E731
+        flips = in_band("df") != in_band("df_old")
+        merged_touched, seen = ckpt_observe(
             delta.join(df_old_touched.withColumnRenamed("df", "df_old"),
                        "shingle", "left")
             .select(
                 "shingle",
                 (F.coalesce("df_old", F.lit(0)) + F.col("d")).alias("df"),
                 F.coalesce("df_old", F.lit(0)).alias("df_old"),
-            )
+            ),
+            n_flipped=F.count_if(flips),
         )
-
-        # 3. band flips → affected OLD conversations. Only touched
-        # shingles can flip; membership probe is a semi-join of the
-        # (immutable-segment) set explode against the small flip list —
-        # columnar scan of the corpus, shuffle ∝ hits.
-        in_band = lambda c: F.col(c).between(F.lit(lo), F.lit(hi))  # noqa: E731
-        flipped = merged_touched.filter(
-            in_band("df") != in_band("df_old")
-        ).select("shingle")
-        rpt["n_flipped_shingles"] = flipped.count()
+        flipped = merged_touched.filter(flips).select("shingle")
+        rpt["n_flipped_shingles"] = seen["n_flipped"]
         tick("df_merge")
         survivors_pre = self._resolve_conv(man, SEG_SETS, retired_sets).join(
             removed_c, "conv_id", "left_anti"
         )
-        affected_old = eager_ckpt(
+        affected_old, seen = ckpt_observe(
             shingling.exploded_shingles(survivors_pre)
             .join(
                 self._restrict_hint(flipped, rpt["n_flipped_shingles"]),
@@ -559,7 +587,7 @@ class IncrementalDedup:
             .select("conv_id")
             .dropDuplicates()
         )
-        n_affected = affected_old.count()
+        n_affected = seen["n"]
         rpt["n_affected_old"] = n_affected
         tick("affected_probe")
 
@@ -590,7 +618,6 @@ class IncrementalDedup:
         # needed anyway and building a corpus-sized restrict set costs
         # more than one full resolve. df_probe_regime ("auto" | restricted"
         # | "full") pins the choice — both branches are equality-tested.
-        n_live = live_ids.count()
         delta_regime = (
             self.df_probe_regime == "restricted"
             or (
@@ -601,7 +628,7 @@ class IncrementalDedup:
         if delta_regime:
             # delta regime: the state probe is restricted to the
             # affected convs' untouched shingles — a broadcast-sized set
-            untouched_keys = eager_ckpt(
+            untouched_keys, seen = ckpt_observe(
                 affected_sets.select(F.explode("shingles").alias("shingle"))
                 .dropDuplicates()
                 .unionByName(zero_keys)
@@ -610,7 +637,7 @@ class IncrementalDedup:
             )
             state_part = self._resolve_kv(
                 man, SEG_DF, ["shingle"], "df", restrict=untouched_keys,
-                n_restrict=untouched_keys.count(),
+                n_restrict=seen["n"],
             )
         else:
             # corpus-drift regime (worst case: most conversations
@@ -631,9 +658,19 @@ class IncrementalDedup:
         resign_informative = shingling.informative_shingle_sets(
             resign_expl, df_for_resign, lo, hi
         )
-        resigned = eager_ckpt(lsh.compute_signatures(resign_informative, cfg))
-        n_resigned = resigned.count()
+        resigned, seen = ckpt_observe(
+            lsh.compute_signatures(resign_informative, cfg),
+            min_n=F.min("n_shingles"),
+        )
+        n_resigned = seen["n"]
         rpt["n_resigned"] = n_resigned
+        # smallest signed stratum after this apply: the prefix probe
+        # floor now, the manifest's min_stratum at the fold (monotone-
+        # decreasing — a new doc smaller than every historical one
+        # lowers the meet stratum of its pairs)
+        min_strat = int(man.get("min_stratum", 0))
+        if seen["min_n"]:
+            min_strat = min(min_strat, int(math.floor(math.log2(seen["min_n"]))))
         tick("resign")
 
         # convs whose sig-cadence rows retire: re-signed olds + removed
@@ -655,30 +692,32 @@ class IncrementalDedup:
             )
             rpt.update(rpt_b)
         else:
-            changed = eager_ckpt(
+            changed, seen = ckpt_observe(
                 affected_old.unionByName(added_convs).dropDuplicates()
             )
+            rpt["n_changed_convs"] = seen["n"]
             cand_changed = self._prefix_candidates(
-                man, retired_sigs, sigs_retired_rows, resigned, changed
+                man, retired_sigs, sigs_retired_rows, resigned, changed,
+                min_strat,
             )
             sz_touched = None
-            skew_new = eager_ckpt(cat.read(TBL_SKEW))  # stays the empty table
+            # no bucket machinery: the skew report stays the empty table
+            skew_new = empty_frame(spark, _SKEW_DDL)
 
-        cand_changed = eager_ckpt(cand_changed)
-        rpt["n_changed_convs"] = changed.count()
-        rpt["n_candidate_pairs"] = cand_changed.count()
+        cand_changed, seen = ckpt_observe(cand_changed)
+        rpt["n_candidate_pairs"] = seen["n"]
         tick("candidates")
 
         # 5. verify only changed-touching candidates; signatures come
         # from a conv-restricted state read spliced with the re-signed
-        pair_convs = eager_ckpt(
+        pair_convs, seen = ckpt_observe(
             cand_changed.select(F.col("conv_a").alias("conv_id"))
             .unionByName(cand_changed.select(F.col("conv_b").alias("conv_id")))
             .dropDuplicates()
         )
         sigs_lookup = self._resolve_conv(
             man, SEG_SIGS, retired_sigs, restrict=pair_convs,
-            n_restrict=pair_convs.count(),
+            n_restrict=seen["n"],
         ).join(sig_gone, "conv_id", "left_anti").unionByName(
             resigned.join(pair_convs, "conv_id", "left_semi")
         )
@@ -691,12 +730,12 @@ class IncrementalDedup:
             drop_pairs.select(F.col("conv_id").alias("conv_b")),
             "conv_b", "left_anti",
         )
-        verified_all = eager_ckpt(
+        verified_all, seen = ckpt_observe(
             kept_old.unionByName(verified_new).dropDuplicates(
                 ["conv_a", "conv_b"]
             )
         )
-        rpt["n_verified_pairs"] = verified_all.count()
+        rpt["n_verified_pairs"] = seen["n"]
         tick("verify")
 
         # 6. clusters + emit over the post-change corpus (edges are
@@ -708,7 +747,7 @@ class IncrementalDedup:
         clusters = eager_ckpt(
             connected_components(
                 nodes, verified_all.select("conv_a", "conv_b"),
-                cfg.cc_max_iters,
+                cfg.cc_max_iters, n_edges=rpt["n_verified_pairs"],
             )
         )
         tick("clusters")
@@ -729,9 +768,12 @@ class IncrementalDedup:
             cat.invalidate(stale)
 
         new_segs = {k: list(v) for k, v in man["segments"].items()}
+        # frames of the new segments, memoized once the manifest lists them
+        written: dict[str, DataFrame] = {}
 
         def seg_write(base: str, df: DataFrame) -> None:
-            cat.write(f"{base}__s{e_new}", df, meta={"epoch": e_new})
+            name = f"{base}__s{e_new}"
+            written[name] = cat.write(name, df, meta={"epoch": e_new})
             new_segs[base] = new_segs.get(base, []) + [e_new]
 
         # empty deltas write NO segment (a zero-row parquet dir is a
@@ -757,31 +799,25 @@ class IncrementalDedup:
                 keep_epoch=True, n_restrict=n_removed,
             ).select("conv_id", "__e")
             if removed is not None
-            else spark.createDataFrame([], "conv_id string, __e int")
+            else empty_frame(spark, "conv_id string, __e int")
         )
-        cat.write(
-            TBL_RETIRED_SETS,
-            retired_sets.unionByName(eager_ckpt(sets_retired_rows)), meta=em,
-        )
-        cat.write(
-            TBL_RETIRED_SIGS,
-            retired_sigs.unionByName(eager_ckpt(sigs_retired_rows)), meta=em,
-        )
-        cat.write(TBL_VERIFIED, verified_all, meta=em)
-        cat.write(TBL_CLUSTERS, clusters, meta=em)
         skew_new = eager_ckpt(skew_new)
-        cat.write(TBL_SKEW, skew_new, meta=em)
+        for tbl, df in (
+            (TBL_RETIRED_SETS, retired_sets.unionByName(sets_retired_rows)),
+            (TBL_RETIRED_SIGS, retired_sigs.unionByName(sigs_retired_rows)),
+            (TBL_VERIFIED, verified_all),
+            (TBL_CLUSTERS, clusters),
+            (TBL_SKEW, skew_new),
+        ):
+            written[tbl] = cat.write(tbl, df, meta=em)
 
-        min_strat = int(man.get("min_stratum", 0))
-        new_min = resigned.agg(F.min("n_shingles").alias("m")).collect()[0]["m"]
-        if new_min:
-            min_strat = min(min_strat, int(math.floor(math.log2(new_min))))
         self._commit_manifest({
             "fingerprint": cat.fingerprint,
             "epoch": e_new,
             "segments": new_segs,
             "min_stratum": min_strat,
         })
+        self._frames.update(written)
         tick("fold")
 
         if (
@@ -821,18 +857,18 @@ class IncrementalDedup:
         every member of a drop-tier-crossing bucket is promoted into the
         changed set (both crossing directions: an append can push a
         bucket over, a removal can pull one back under)."""
-        cfg, cat, spark = self.cfg, self.cat, self.spark
+        cfg = self.cfg
         rpt: dict = {}
         bkey = ["band_id", "band_hash"]
 
         bands_added = eager_ckpt(lsh.explode_bands(resigned))
-        sig_gone = eager_ckpt(sig_gone)
-        n_gone = sig_gone.count()
+        sig_gone, seen = ckpt_observe(sig_gone)
+        n_gone = seen["n"]
         bands_gone = self._resolve_conv(
             man, SEG_BANDS, retired_sigs, restrict=sig_gone,
             n_restrict=n_gone,
         )
-        sz_delta = eager_ckpt(
+        sz_delta, seen = ckpt_observe(
             lsh.band_bucket_sizes(bands_added)
             .withColumnRenamed("bucket_size", "n_add")
             .join(
@@ -847,12 +883,14 @@ class IncrementalDedup:
             )
             .filter(F.col("d") != 0)
         )
-        rpt["n_touched_buckets"] = sz_delta.count()
+        rpt["n_touched_buckets"] = seen["n"]
         sz_old_touched = self._resolve_kv(
             man, SEG_SIZES, bkey, "bucket_size", restrict=sz_delta,
             n_restrict=rpt["n_touched_buckets"],
         )
-        sz_touched = eager_ckpt(
+        drop = cfg.max_salted_bucket
+        crosses = (F.col("sz_old") > drop) != (F.col("bucket_size") > drop)
+        sz_touched, seen = ckpt_observe(
             sz_delta.join(
                 sz_old_touched.withColumnRenamed("bucket_size", "sz_old"),
                 bkey, "left",
@@ -862,16 +900,11 @@ class IncrementalDedup:
                 (F.coalesce("sz_old", F.lit(0)) + F.col("d"))
                 .alias("bucket_size"),
                 F.coalesce("sz_old", F.lit(0)).alias("sz_old"),
-            )
+            ),
+            n_crossing=F.count_if(crosses),
         )
-
-        drop = cfg.max_salted_bucket
-        crossing = eager_ckpt(
-            sz_touched.filter(
-                (F.col("sz_old") > drop) != (F.col("bucket_size") > drop)
-            ).select(*bkey)
-        )
-        rpt["n_tier_crossing_buckets"] = crossing.count()
+        crossing = sz_touched.filter(crosses).select(*bkey)
+        rpt["n_tier_crossing_buckets"] = seen["n_crossing"]
         # members (old index ∪ new rows) of crossing buckets, survivors only
         old_members = (
             self._seg_union(man, SEG_BANDS)
@@ -889,7 +922,7 @@ class IncrementalDedup:
             .dropDuplicates()
             .join(removed_c, "conv_id", "left_anti")
         )
-        changed = eager_ckpt(
+        changed, seen = ckpt_observe(
             affected_old.unionByName(added_convs)
             .unionByName(tier_changed)
             .dropDuplicates()
@@ -898,14 +931,14 @@ class IncrementalDedup:
         # post-apply band index restricted to the buckets changed convs
         # occupy: tier decisions come from GLOBAL (state-maintained)
         # sizes, pair volume from changed convs' bucket membership
-        n_changed = changed.count()
+        n_changed = seen["n"]
         rpt["n_changed_convs"] = n_changed
         bands_post_all = self._resolve_conv(
             man, SEG_BANDS, retired_sigs
         ).join(
             self._restrict_hint(sig_gone, n_gone), "conv_id", "left_anti"
         ).unionByName(bands_added)
-        changed_buckets = eager_ckpt(
+        changed_buckets, seen = ckpt_observe(
             bands_post_all.join(
                 self._restrict_hint(changed, n_changed),
                 "conv_id", "left_semi",
@@ -913,7 +946,7 @@ class IncrementalDedup:
             .select(*bkey)
             .dropDuplicates()
         )
-        rpt["n_changed_buckets"] = changed_buckets.count()
+        rpt["n_changed_buckets"] = seen["n"]
         bands_restricted = bands_post_all.join(
             self._restrict_hint(changed_buckets, rpt["n_changed_buckets"]),
             bkey, "left_semi",
@@ -939,7 +972,7 @@ class IncrementalDedup:
         ), skew_new, rpt
 
     def _prefix_candidates(
-        self, man, retired_sigs, sigs_retired_rows, resigned, changed
+        self, man, retired_sigs, sigs_retired_rows, resigned, changed, s_min
     ) -> DataFrame:
         """One-sided exact prefix-filter candidates (AllPairs/PPJoin
         family) over the informative shingle sets, under ascending
@@ -958,22 +991,15 @@ class IncrementalDedup:
         Changed side: the re-signed convs (delta-sized, eager). Probe
         side: every current signature — a columnar scan of immutable
         segments; the join shuffles ∝ emit rows, and when the changed
-        side is small AQE turns it into a broadcast probe."""
+        side is small AQE turns it into a broadcast probe. ``s_min`` is
+        the smallest signed size stratum after this apply: the probe side
+        emits down to it."""
         from fractions import Fraction
 
         cfg = self.cfg
         frac = Fraction(cfg.verify_containment).limit_denominator(1_000_000)
         t_num, t_den = frac.numerator, frac.denominator
         p1 = 1 if cfg.containment_plus1 else 0
-        # effective probe floor for THIS apply: the manifest minimum
-        # extended by the re-signed batch — a new doc smaller than every
-        # historical one lowers the meet stratum of its pairs, and the
-        # probe side must emit down to it (the manifest itself is only
-        # updated at the fold)
-        s_min = int(man.get("min_stratum", 0))
-        m = resigned.agg(F.min("n_shingles").alias("m")).collect()[0]["m"]
-        if m:
-            s_min = min(s_min, int(math.floor(math.log2(m))))
 
         def emit(sigs: DataFrame) -> DataFrame:
             return (
@@ -1011,9 +1037,10 @@ class IncrementalDedup:
         sigs_post = self._resolve_conv(man, SEG_SIGS, retired_sigs).join(
             sigs_retired_rows.select("conv_id"), "conv_id", "left_anti"
         ).unionByName(resigned.select(*self._sig_cols()))
-        a = eager_ckpt(
+        a, seen = ckpt_observe(
             emit(resigned.join(changed, "conv_id", "left_semi"))
-        ).select(
+        )
+        a = a.select(
             F.col("conv_id").alias("conv_a"), F.col("s_own").alias("sa"),
             F.col("rem").alias("rem_a"), "s", "c_s", "tok",
         )
@@ -1025,8 +1052,7 @@ class IncrementalDedup:
         # corpus-wide probe explode a map-side hash lookup (no shuffle of
         # the probe rows). Lower threshold than _restrict_hint — these
         # rows are 6 columns wide, not a bare key.
-        n_a = a.count()
-        a_side = F.broadcast(a) if n_a <= 2_000_000 else a
+        a_side = F.broadcast(a) if seen["n"] <= 2_000_000 else a
         pairs = (
             a_side.join(b, ["s", "tok"])
             .filter(
@@ -1055,9 +1081,10 @@ class IncrementalDedup:
         cat = self.cat
         man = self._check_state()
         e = int(man["epoch"]) + 1
-        retired_sets = eager_ckpt(cat.read(TBL_RETIRED_SETS))
-        retired_sigs = eager_ckpt(cat.read(TBL_RETIRED_SIGS))
+        retired_sets = eager_ckpt(self._table(TBL_RETIRED_SETS))
+        retired_sigs = eager_ckpt(self._table(TBL_RETIRED_SIGS))
         segs: dict[str, list[int]] = {}
+        written: dict[str, DataFrame] = {}
         conv_tables = [
             (SEG_TURNS, retired_sets), (SEG_SETS, retired_sets),
             (SEG_SIGS, retired_sigs),
@@ -1067,22 +1094,26 @@ class IncrementalDedup:
             conv_tables.append((SEG_BANDS, retired_sigs))
             kv_tables.append((SEG_SIZES, ["band_id", "band_hash"],
                               "bucket_size"))
+        em = {"epoch": e}
         for base, retired in conv_tables:
             resolved = eager_ckpt(self._resolve_conv(man, base, retired))
-            cat.write(f"{base}__s{e}", resolved, meta={"epoch": e})
+            written[f"{base}__s{e}"] = cat.write(
+                f"{base}__s{e}", resolved, meta=em
+            )
             segs[base] = [e]
         for base, keys, val in kv_tables:
             resolved = eager_ckpt(self._resolve_kv(man, base, keys, val))
-            cat.write(f"{base}__s{e}", resolved, meta={"epoch": e})
+            written[f"{base}__s{e}"] = cat.write(
+                f"{base}__s{e}", resolved, meta=em
+            )
             segs[base] = [e]
-        em = {"epoch": e}
-        empty_retired = self.spark.createDataFrame([], "conv_id string, __e int")
-        cat.write(TBL_RETIRED_SETS, empty_retired, meta=em)
-        cat.write(TBL_RETIRED_SIGS, empty_retired, meta=em)
+        empty_retired = empty_frame(self.spark, "conv_id string, __e int")
+        for tbl in (TBL_RETIRED_SETS, TBL_RETIRED_SIGS):
+            written[tbl] = cat.write(tbl, empty_retired, meta=em)
         # wholesale result tables are re-stamped at the new epoch
         # (contents unchanged) so the torn-fold check stays uniform
         for tbl in (TBL_VERIFIED, TBL_CLUSTERS, TBL_SKEW):
-            cat.write(tbl, eager_ckpt(cat.read(tbl)), meta=em)
+            written[tbl] = cat.write(tbl, eager_ckpt(self._table(tbl)), meta=em)
         self._commit_manifest({
             "fingerprint": cat.fingerprint,
             "epoch": e,
@@ -1093,6 +1124,7 @@ class IncrementalDedup:
         for base, epochs in man["segments"].items():
             for old_e in epochs:
                 cat.invalidate(f"{base}__s{old_e}")
+        self._frames = written
 
     # -------------------------------------------------------------- helpers
 
@@ -1102,13 +1134,14 @@ class IncrementalDedup:
                 "bands"]
 
     def _as_conv_df(self, conv_ids) -> DataFrame | None:
+        """Distinct ``conv_id`` frame of an id list or frame (a list is
+        deduplicated on the driver)."""
         if conv_ids is None:
             return None
         if isinstance(conv_ids, DataFrame):
-            return conv_ids
-        return self.spark.createDataFrame(
-            [(str(c),) for c in conv_ids], "conv_id string"
-        )
+            return conv_ids.select("conv_id").dropDuplicates()
+        ids = sorted({str(c) for c in conv_ids})
+        return local_frame(self.spark, [(c,) for c in ids], "conv_id string")
 
     def _guard_ids(
         self,
@@ -1119,24 +1152,36 @@ class IncrementalDedup:
     ) -> None:
         """Loud identity guards: removals must exist; additions must be
         new conv_ids unless the same id is being removed in this apply
-        (an edit) — and append() never edits."""
+        (an edit) — and append() never edits. Both checks are counted
+        by one aggregate job."""
+        bad = []
         if removed is not None:
-            missing = removed.join(live_ids, "conv_id", "left_anti").count()
-            if missing:
-                raise ValueError(
-                    f"{missing} conv_ids in the removal batch do not exist "
-                    "in state — refusing a partial delete"
-                )
+            bad.append(
+                removed.join(live_ids, "conv_id", "left_anti")
+                .select(F.lit("missing").alias("k"))
+            )
         if t_new is not None:
             overlap = t_new.select("conv_id").join(
                 live_ids, "conv_id", "left_semi"
             )
             if removed is not None and not append_only:
                 overlap = overlap.join(removed, "conv_id", "left_anti")
-            n = overlap.count()
-            if n:
-                raise ValueError(
-                    f"{n} conv_ids in the new batch already exist in state — "
-                    "append() is append-only; pass the ids in "
-                    "remove_conv_ids too (apply) to express an edit"
-                )
+            bad.append(overlap.select(F.lit("overlap").alias("k")))
+        if not bad:
+            return
+        u = bad[0] if len(bad) == 1 else bad[0].unionByName(bad[1])
+        n = u.agg(
+            F.count_if(F.col("k") == "missing").alias("missing"),
+            F.count_if(F.col("k") == "overlap").alias("overlap"),
+        ).collect()[0]
+        if n["missing"]:
+            raise ValueError(
+                f"{n['missing']} conv_ids in the removal batch do not exist "
+                "in state — refusing a partial delete"
+            )
+        if n["overlap"]:
+            raise ValueError(
+                f"{n['overlap']} conv_ids in the new batch already exist in "
+                "state — append() is append-only; pass the ids in "
+                "remove_conv_ids too (apply) to express an edit"
+            )

@@ -34,7 +34,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from dedup_spark.util import eager_ckpt
+from dedup_spark.util import eager_ckpt, empty_frame
 
 #: edges collected to the driver when the count is at or below this;
 #: ~32 bytes/edge of Python tuples → well under 1 GiB at the cap
@@ -81,7 +81,7 @@ def _unionfind_labels(nodes: DataFrame, edges: DataFrame) -> DataFrame:
             f"conv_id {id_type}, cluster_id {id_type}",
         )
     else:
-        relabel = spark.createDataFrame([], f"conv_id {id_type}, cluster_id {id_type}")
+        relabel = empty_frame(spark, f"conv_id {id_type}, cluster_id {id_type}")
     return nodes.select("conv_id").join(
         F.broadcast(relabel), "conv_id", "left"
     ).select(
@@ -94,14 +94,19 @@ def connected_components(
     edges: DataFrame,
     max_iters: int = 50,
     driver_edge_limit: int = DRIVER_EDGE_LIMIT,
+    n_edges: int | None = None,
 ) -> DataFrame:
     """nodes(conv_id) + edges(conv_a, conv_b) → (conv_id, cluster_id).
 
     cluster_id = min conv_id in the component; isolated nodes label
-    themselves.
+    themselves. A caller that knows the edge count passes ``n_edges``,
+    which saves the size probe's Spark jobs.
     """
-    if driver_edge_limit > 0 and edges.limit(driver_edge_limit + 1).count() <= driver_edge_limit:
-        return _unionfind_labels(nodes, edges)
+    if driver_edge_limit > 0:
+        if n_edges is None:
+            n_edges = edges.limit(driver_edge_limit + 1).count()
+        if n_edges <= driver_edge_limit:
+            return _unionfind_labels(nodes, edges)
     sym = (
         edges.select(F.col("conv_a").alias("src"), F.col("conv_b").alias("dst"))
         .union(edges.select(F.col("conv_b").alias("src"), F.col("conv_a").alias("dst")))

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from dedup_spark.config import DedupConfig
 from dedup_spark.functions.udfs import make_signature_udf
+from dedup_spark.util import local_frame
 
 
 def compute_signatures(informative_sets: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -286,7 +287,8 @@ def containment_candidates(
     recall 1.0 with output-proportional volume.
     """
     spark = signatures.sparkSession
-    thr = spark.createDataFrame(
+    thr = local_frame(
+        spark,
         containment_collision_thresholds(cfg, recall, per_octave=per_octave),
         "s_small int, s_large int, m_min int",
     )

@@ -44,6 +44,7 @@ from dedup_spark.config import DedupConfig
 from dedup_spark.operators import intervals, lsh, scoring, shingling, substring, verify
 from dedup_spark.operators.connected_components import connected_components
 from dedup_spark.operators.transcripts import assemble_transcripts
+from dedup_spark.util import empty_frame
 
 
 @dataclass
@@ -431,8 +432,8 @@ class DedupPipeline:
             skew = (
                 skew_f.result()
                 if skew_f is not None
-                else self.spark.createDataFrame(
-                    [], "band_id int, band_hash long, bucket_size long"
+                else empty_frame(
+                    self.spark, "band_id int, band_hash long, bucket_size long"
                 )
             )
         finally:

@@ -4,7 +4,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 
 def eager_ckpt(df: DataFrame) -> DataFrame:
@@ -31,6 +32,52 @@ def eager_ckpt(df: DataFrame) -> DataFrame:
         StorageLevel, os.environ.get("SPARK_GRAFT_CKPT_LEVEL", "DISK_ONLY")
     )
     return df.localCheckpoint(eager=True, storageLevel=level)
+
+
+def ckpt_observe(df: DataFrame, **aggs: Column) -> tuple[DataFrame, dict]:
+    """:func:`eager_ckpt` that also returns what the checkpoint job saw:
+    the row count as ``"n"`` plus each named aggregate in ``aggs``
+    (``min_n=F.min("n_shingles")`` → ``"min_n"``).
+
+    The values ride on ``DataFrame.observe``, so the checkpoint job
+    itself computes them: a ``.count()`` or ``.agg().collect()`` on the
+    checkpoint would be one or two more Spark jobs, each a fixed
+    scheduling cost that dominates small incremental folds. A statically
+    empty plan runs no job and reports ``n == 0``.
+
+    A checkpoint that saw no rows comes back as ``limit(0)``, which plans
+    as an empty ``LocalRelation``: the optimizer then prunes the joins
+    and aggregations downstream of it, and their jobs never run."""
+    obs = Observation()
+    ck = eager_ckpt(df.observe(
+        obs, F.count(F.lit(1)).alias("n"),
+        *(c.alias(name) for name, c in aggs.items()),
+    ))
+    seen = obs.get
+    return (ck.limit(0) if seen["n"] == 0 else ck), seen
+
+
+def empty_frame(spark: SparkSession, ddl: str) -> DataFrame:
+    """A frame with the ``ddl`` schema and no rows, planned as an empty
+    ``LocalRelation``: it runs no job and joins against it are pruned.
+    ``spark.createDataFrame([], ddl)`` is a Python-RDD scan instead,
+    which starts Python workers in every job that touches it."""
+    return spark.range(1).select(*(
+        F.lit(None).cast(f.dataType).alias(f.name)
+        for f in StructType.fromDDL(ddl).fields
+    )).limit(0)
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """Driver-side ``rows`` as a ``LocalRelation``. They go through a
+    pandas frame, which Arrow converts on the JVM side; a list of
+    tuples would be a Python-RDD scan (see :func:`empty_frame`)."""
+    import pandas as pd
+
+    if not rows:
+        return empty_frame(spark, ddl)
+    names = StructType.fromDDL(ddl).fieldNames()
+    return spark.createDataFrame(pd.DataFrame(rows, columns=names), ddl)
 
 # logical-plan node names that imply a shuffle (or explicit repartition)
 # below this point — such plans are already wide (shuffle width comes

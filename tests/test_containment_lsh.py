@@ -6,6 +6,8 @@ plain r=1 banding."""
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pytest
 
@@ -55,6 +57,17 @@ class TestCollisionThreshold:
         assert table[(7, 7)] >= 2  # near-symmetric strata: real pruning
         assert table[(5, 20)] == 1  # extreme asymmetry: no pruning possible
         assert (62, 62) in table  # full int64 size range covered
+
+    def test_threshold_frame_is_local_relation(self, spark):
+        """The threshold table is driver-built: it must plan as a
+        LocalRelation, not a Python-RDD scan that starts Python workers
+        in the candidate join's jobs."""
+        cfg = DedupConfig()
+        sets = {"a": np.arange(50), "b": np.arange(25, 75)}
+        cands = lsh.containment_candidates(_signatures(spark, sets, cfg), cfg)
+        plan = cands._jdf.queryExecution().optimizedPlan().toString()
+        assert re.search(r"LocalRelation \[s_small#\d+, s_large#\d+, m_min", plan)
+        assert not re.search(r"LogicalRDD \[s_small", plan)
 
 
 class TestContainmentRecall:

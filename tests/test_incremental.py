@@ -677,3 +677,70 @@ class TestFullDfProbeRegime:
         assert _pairs(res.verified_pairs) == _pairs(full.verified_pairs)
         assert _clusters(res.clusters) == _clusters(full.clusters)
         assert ("lone", "zc_new") in _pairs(res.verified_pairs)
+
+
+class TestFoldFixedCost:
+    """A fold's fixed cost is its count of Spark jobs: at test sizes
+    every job is mostly scheduling, so the count is the wall time."""
+
+    #: jobs run by the append and by the edit below: measured 110 and
+    #: 70 on local[4] with Spark 4.1, plus 10% slack for plan-shape
+    #: drift across Spark versions
+    APPEND_JOBS = 121
+    EDIT_JOBS = 77
+
+    def test_small_append_and_edit_job_budget(
+        self, spark, spark_jobs, tmp_path_factory
+    ):
+        rng = np.random.Generator(np.random.PCG64(31))
+
+        def seg(n):
+            return "".join(chr(97 + c) for c in rng.integers(0, 26, size=n))
+
+        old = {f"o{i}": [seg(300), seg(200)] for i in range(30)}
+        new = {f"n{i}": [seg(300)] for i in range(3)}
+        new["n_dup"] = list(old["o2"])
+        inc = IncrementalDedup(
+            spark, DedupConfig(), str(tmp_path_factory.mktemp("wh_jobs"))
+        )
+        inc.bootstrap(_turns_df(spark, old))
+        with spark_jobs() as append:
+            res = inc.append(_turns_df(spark, new))
+        assert ("n_dup", "o2") in _pairs(res.verified_pairs)
+        edited = {"o5": [seg(250)], "n1": [seg(280)]}
+        with spark_jobs() as edit:
+            res = inc.apply(
+                new_turns=_turns_df(spark, edited),
+                remove_conv_ids=["o5", "n1", "o7"],
+            )
+        assert res.n_removed_convs == 3
+        assert append.n <= self.APPEND_JOBS, append.n
+        assert edit.n <= self.EDIT_JOBS, edit.n
+
+
+class TestSegmentMemo:
+    def test_rebootstrap_then_append_equals_full(self, spark, tmp_path_factory):
+        """One instance re-bootstraps its warehouse with a different
+        corpus: the segment frames it memoized for the first state
+        must not serve the second."""
+        turns_pdf, _, _ = generate_corpus(CorpusSpec(n_convs=60))
+        all_turns = spark.createDataFrame(turns_pdf).cache()
+        convs = sorted({r.conv_id for r in all_turns.select("conv_id").collect()})
+        first = all_turns.filter(F.col("conv_id").isin(convs[:20]))
+        second = all_turns.filter(F.col("conv_id").isin(convs[20:50]))
+        late = all_turns.filter(F.col("conv_id").isin(convs[50:]))
+
+        cfg = DedupConfig()
+        inc = IncrementalDedup(
+            spark, cfg, str(tmp_path_factory.mktemp("wh_reboot"))
+        )
+        inc.bootstrap(first)
+        inc.append(all_turns.filter(F.col("conv_id").isin(convs[20:25])))
+        inc.bootstrap(second)
+        res = inc.append(late)
+        full = DedupPipeline(
+            spark, cfg, str(tmp_path_factory.mktemp("wh_reboot_f"))
+        ).run(second.unionByName(late))
+        assert _pairs(res.verified_pairs) == _pairs(full.verified_pairs)
+        assert _clusters(res.clusters) == _clusters(full.clusters)
+        assert _turn_keys(res.deduped_turns) == _turn_keys(full.deduped_turns)

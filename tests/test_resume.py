@@ -30,6 +30,26 @@ def test_stage_reuse_and_fingerprint_invalidation(spark, tmp_path):
     assert calls["n"] == 2
 
 
+def test_write_runs_one_job_and_returns_the_stored_table(
+    spark, spark_jobs, tmp_path
+):
+    """The frame write returns carries the written schema instead of
+    inferring it (a parquet read infers with a Spark job of its own)."""
+    cat = StageCatalog(spark, str(tmp_path), "fp1")
+    df = spark.range(50).select(
+        F.col("id"),  # non-nullable in memory, nullable once stored
+        (F.col("id") % 3).cast("int").alias("k"),
+        F.array(F.col("id"), F.lit(None).cast("long")).alias("arr"),
+        F.when(F.col("id") % 2 == 0, F.lit("even")).alias("s"),
+    )
+    with spark_jobs() as jobs:
+        out = cat.write("t", df)
+    assert jobs.n == 1
+    fresh = spark.read.parquet(str(tmp_path / "t"))
+    assert out.schema == fresh.schema
+    assert sorted(out.collect()) == sorted(fresh.collect()) == sorted(df.collect())
+
+
 def test_pipeline_resume_equivalence(spark, tmp_path):
     """Kill-after-stage-k semantics: delete downstream stages, rerun,
     final tables identical (FIXTURES.md §3 resume)."""

@@ -1,10 +1,16 @@
-"""eager_ckpt: lineage-truncating checkpoint at a disk-backed level."""
+"""eager_ckpt: lineage-truncating checkpoint at a disk-backed level,
+its observed-count variant, and the local frames that plan as
+LocalRelation."""
 
 import os
 
 from pyspark.sql import functions as F
 
-from dedup_spark.util import eager_ckpt
+from dedup_spark.util import ckpt_observe, eager_ckpt, empty_frame, local_frame
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
 
 
 def test_eager_ckpt_preserves_rows_and_truncates_lineage(spark):
@@ -35,6 +41,81 @@ def test_eager_ckpt_level_env_override(spark, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_CKPT_LEVEL", "MEMORY_AND_DISK")
     ck = eager_ckpt(spark.range(10))
     assert ck.count() == 10
+
+
+def _grouped(spark):
+    return (
+        spark.range(0, 1000)
+        .withColumn("g", F.col("id") % 7)
+        .groupBy("g")
+        .agg(F.count("*").alias("n"), F.sum("id").alias("s"))
+    )
+
+
+def test_ckpt_observe_equals_count_and_aggregates(spark):
+    df = _grouped(spark)
+    ck, seen = ckpt_observe(
+        df, min_n=F.min("n"), big=F.count_if(F.col("n") > 142)
+    )
+    rows = df.collect()
+    assert seen == {
+        "n": df.count(),
+        "min_n": min(r["n"] for r in rows),
+        "big": sum(r["n"] > 142 for r in rows),
+    }
+    assert sorted(ck.collect()) == sorted(rows)
+    # a plan that is empty at run time, and one that is statically empty
+    # (optimized to an empty LocalRelation): both report 0, neither hangs
+    ck, seen = ckpt_observe(df.filter("n > 10000"), min_n=F.min("n"))
+    assert seen == {"n": 0, "min_n": None}
+    # an empty checkpoint plans as an empty LocalRelation, so joins
+    # against it are pruned before any job runs
+    assert _plan(ck).startswith("LocalRelation <empty>")
+    assert _plan(df.join(ck, "g", "left_semi")).startswith("LocalRelation <empty>")
+    ck, seen = ckpt_observe(df.limit(0), big=F.count_if(F.col("n") > 0))
+    assert seen["n"] == 0 and not seen["big"]
+    assert ck.collect() == []
+
+
+def test_ckpt_observe_adds_no_job(spark, spark_jobs):
+    df = _grouped(spark)
+    with spark_jobs() as plain:
+        eager_ckpt(df)
+    with spark_jobs() as observed:
+        _, seen = ckpt_observe(df, min_n=F.min("n"))
+    assert seen["n"] == 7
+    assert plain.n > 0
+    assert observed.n == plain.n
+    with spark_jobs() as counted:
+        eager_ckpt(df).count()
+    assert counted.n > plain.n  # what the observation saves
+
+
+def test_empty_frame_is_local_relation_without_tasks(spark, spark_jobs):
+    ddl = "conv_id string, __e int"
+    empty = empty_frame(spark, ddl)
+    assert empty.schema == spark.createDataFrame([], ddl).schema
+    assert _plan(empty).startswith("LocalRelation <empty>")
+    # joins against it are pruned at plan time
+    assert _plan(
+        spark.range(10).withColumnRenamed("id", "__e")
+        .join(empty, "__e", "left_semi")
+    ).startswith("LocalRelation <empty>")
+    with spark_jobs() as jobs:
+        assert empty.collect() == []
+        eager_ckpt(empty)
+    assert jobs.n == 0
+
+
+def test_local_frame_rows_and_plan(spark):
+    rows = [(1, 2, 3), (4, 5, 6)]
+    df = local_frame(spark, rows, "s_small int, s_large int, m_min int")
+    assert _plan(df).startswith("LocalRelation [s_small")
+    assert [tuple(r) for r in df.collect()] == rows
+    assert df.schema.simpleString() == "struct<s_small:int,s_large:int,m_min:int>"
+    assert _plan(local_frame(spark, [], "conv_id string")).startswith(
+        "LocalRelation <empty>"
+    )
 
 
 def test_shared_memo_mtime_guard(tmp_path, monkeypatch):

@@ -21,7 +21,9 @@ Two corpus regimes:
 Usage:
     python tools/bench_incremental.py [--mode synthetic|lowoverlap]
         [--n-old 12000] [--n-new 1000] [--master local[8]]
-Prints one JSON line per phase plus a final summary line.
+Prints one JSON line per phase plus a final summary line, which carries
+the append's Spark job count (``jobs_per_fold``) next to its per-phase
+walls (``t_phases``).
 """
 
 from __future__ import annotations
@@ -152,6 +154,8 @@ def main() -> int:
         "bootstrap_wall_sec": boot["wall_sec"],
         "append_wall_sec": app["wall_sec"],
         "ratio": round(ratio, 3),
+        "jobs_per_fold": app["jobs"],
+        "t_phases": app.get("delta_report", {}).get("t_phases", {}),
         "delta_report": app.get("delta_report", {}),
         "master": args.master,
     }))
